@@ -29,7 +29,7 @@ def test_cli_synthetic_run_and_resume(tmp_path):
     out = _run_cli(wd, ["--synthetic", "120"])
     assert set(out["stages"]) == {
         "mentions", "triples", "nodes", "canon_map", "edge_provenance", "edges",
-        "scored_docs",
+        "scored_docs", "delta_stats",
     }
     rows = {s: m["rows_out"] for s, m in out["stages"].items()}
     assert all(v > 0 for v in rows.values())
@@ -40,3 +40,13 @@ def test_cli_synthetic_run_and_resume(tmp_path):
     out2 = _run_cli(wd, ["--synthetic", "120", "--resume"])
     assert {s: m["rows_out"] for s, m in out2["stages"].items()} == rows
     assert out2["stages"]["mentions"]["wall_ms"] == out["stages"]["mentions"]["wall_ms"]
+
+    # refresh of the unchanged corpus against the first run: same stages,
+    # nothing re-extracted
+    import pyarrow.parquet as pq
+
+    wd3 = tmp_path / "kg_refresh"
+    out3 = _run_cli(wd3, ["--synthetic", "120", "--incremental-from", str(wd)])
+    assert set(out3["stages"]) == set(rows)
+    stats = pq.read_table(str(wd3 / "delta_stats")).to_pylist()
+    assert stats == [{"n_docs": 120, "n_extracted": 0, "n_retired": 0}]

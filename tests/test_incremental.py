@@ -1,7 +1,7 @@
-"""Incremental pipeline (pipeline.run_pipeline_incremental): only new/
+"""Incremental pipeline (pipeline.run_pipeline with a prior): only new/
 changed docs are re-scored (delta by the doc_id+sha256 invariant), prior
 rows are reused for byte-identical docs, and the merged outputs equal a
-full recompute over the new corpus exactly."""
+full recompute — the same driver from an empty prior — exactly."""
 
 from __future__ import annotations
 
@@ -59,6 +59,12 @@ def test_incremental_equals_full_recompute(spark, v1_v2, tmp_path_factory):
     assert stats["n_extracted"] == changed + 8
     assert stats["n_retired"] == changed + deleted
     assert stats["n_docs"] == 60 - deleted + 8
+
+    # a full build is a refresh from an empty prior: every doc extracted,
+    # nothing retired, and the same stages committed
+    n = stats["n_docs"]
+    assert tuple(full["delta_stats"].collect()[0]) == (n, n, 0)
+    assert set(full) == set(inc)
 
 
 def test_incremental_resume_reads_snapshots(spark, v1_v2, tmp_path_factory):
@@ -135,12 +141,11 @@ def test_incremental_config_drift_fails_fast(spark, v1_v2, tmp_path_factory):
 
 
 def test_incremental_snapshots_are_delta_only(spark, v1_v2, tmp_path_factory):
-    """cfg.incremental_delta_only (default): the big row stages store ONLY
-    the delta extraction plus a `_retired` doc-key table; read_stage
-    resolves base − retired ∪ delta. The resolved views were proven equal
-    to a full recompute above — here pin the WRITE volume: local files
-    hold rows only for new/changed docs, and the audit still passes on
-    the delta snapshot."""
+    """A refresh's big row stages store ONLY the delta extraction plus a
+    `_retired` doc-key table; read_stage resolves base − retired ∪ delta.
+    The resolved views were proven equal to a full recompute above — here
+    pin the WRITE volume: local files hold rows only for new/changed docs,
+    and the audit still passes on the delta snapshot."""
     from theta_spark.pipeline import audit_stage, read_stage_local, run_pipeline_incremental
 
     c1, c2 = v1_v2
@@ -245,22 +250,6 @@ def test_incremental_chain_two_deltas(spark, v1_v2, tmp_path_factory):
         ("edges", ["subj", "pred", "obj", "n_docs"]),
     ]:
         assert _rowset(inc3[stage], cols) == _rowset(full[stage], cols), stage
-
-
-def test_incremental_full_rewrite_flag_off(spark, v1_v2, tmp_path_factory):
-    """incremental_delta_only=False keeps the legacy self-contained
-    snapshots: no delta_base in the manifest, rows for ALL current docs."""
-    from theta_spark.config import PipelineConfig
-    from theta_spark.pipeline import read_stage_local, run_pipeline_incremental, stage_manifest
-
-    c1, c2 = v1_v2
-    w1 = str(tmp_path_factory.mktemp("ff_v1"))
-    w2 = str(tmp_path_factory.mktemp("ff_v2"))
-    run_pipeline(spark, c1, w1)
-    cfg = PipelineConfig(incremental_delta_only=False)
-    inc = run_pipeline_incremental(spark, c2, w2, prior_workdir=w1, cfg=cfg)
-    assert "delta_base" not in stage_manifest(w2, "mentions")
-    assert read_stage_local(spark, w2, "mentions").count() == inc["mentions"].count()
 
 
 def test_rewrite_stage_full_flattens_chain(spark, v1_v2, tmp_path_factory):

@@ -128,6 +128,8 @@ def test_empty_corpus_pipeline_and_resume(spark, tmp_path):
         # the scored-docs registry still records both docs: zero-yield docs
         # are exactly what it exists to witness (incremental delta)
         "scored_docs": 2,
+        # one (n_docs, n_extracted, n_retired) row, as in a refresh
+        "delta_stats": 1,
     }
     resumed = run_pipeline(spark, corpus, wd, PipelineConfig(), resume=True)
     assert resumed["edges"].count() == 0

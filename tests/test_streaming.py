@@ -4,7 +4,7 @@ foreachBatch with availableNow, reading a file-source corpus stream."""
 import glob
 
 from theta_spark.corpus import CORPUS_SCHEMA, corpus_rows, generate_corpus
-from theta_spark.streaming import attach_stream
+from theta_spark.streaming.ingest import attach_stream_incremental
 
 
 def test_foreach_batch_extraction(spark, tmp_path):
@@ -15,7 +15,7 @@ def test_foreach_batch_extraction(spark, tmp_path):
     stream = spark.readStream.schema(CORPUS_SCHEMA).parquet(src)
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    q = attach_stream(stream, out, ckpt)
+    q = attach_stream_incremental(stream, out, ckpt)
     q.awaitTermination(120)
 
     mentions = spark.read.parquet(out + "/mentions")
@@ -25,20 +25,3 @@ def test_foreach_batch_extraction(spark, tmp_path):
     assert mentions.count() > 0
     assert got == gold
     assert glob.glob(ckpt + "/*")  # streaming checkpoint written
-
-
-def test_epoch_replay_is_idempotent(spark, tmp_path):
-    """Crash-replay semantics: re-running the same epoch overwrites its own
-    epoch=<id> directory instead of appending duplicates (exactly-once sink
-    claim of attach_stream)."""
-    from theta_spark.streaming import process_corpus_batch
-
-    docs = generate_corpus(10, seed=7)
-    batch = spark.createDataFrame(corpus_rows(docs), schema=CORPUS_SCHEMA)
-    out = str(tmp_path / "out2")
-    process_corpus_batch(batch, out, epoch_id=0)
-    first = spark.read.parquet(out + "/triples").count()
-    process_corpus_batch(batch, out, epoch_id=0)  # replay same epoch
-    assert spark.read.parquet(out + "/triples").count() == first
-    process_corpus_batch(batch, out, epoch_id=1)  # new epoch appends
-    assert spark.read.parquet(out + "/triples").count() == 2 * first

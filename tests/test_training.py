@@ -234,3 +234,16 @@ def test_quality_lr_empty_input(spark):
 
     df = spark.createDataFrame([], "doc_id long, text string, n_chars long")
     assert train_quality_lr(df, iters=2).count() == 0
+
+
+def test_quality_lr_oversized_step_raises(spark):
+    """The i64 exactness bound is a real error, not an assert that
+    `python -O` strips: a learning rate that throws the weights past it
+    stops training with a ValueError."""
+    import pytest
+
+    from theta_spark.operators.training import train_quality_lr
+
+    _, df = _qdocs(spark)
+    with pytest.raises(ValueError, match="exactness bound"):
+        train_quality_lr(df, iters=2, lr_num=10**12)

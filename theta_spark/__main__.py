@@ -58,7 +58,7 @@ def main(argv=None) -> int:
     args = build_parser().parse_args(argv)
 
     from theta_spark.config import PipelineConfig
-    from theta_spark.pipeline import run_pipeline, run_pipeline_incremental, stage_complete
+    from theta_spark.pipeline import run_pipeline, stage_complete
     from theta_spark.session import get_spark
 
     spark = get_spark(app_name="theta-spark-kg", master=args.master)
@@ -76,12 +76,9 @@ def main(argv=None) -> int:
 
         corpus = read_table(spark, args.input)
 
-    if args.incremental_from:
-        stages = run_pipeline_incremental(
-            spark, corpus, args.workdir, args.incremental_from, cfg, resume=args.resume
-        )
-    else:
-        stages = run_pipeline(spark, corpus, args.workdir, cfg, resume=args.resume)
+    stages = run_pipeline(
+        spark, corpus, args.workdir, cfg, resume=args.resume, prior_workdir=args.incremental_from
+    )
 
     import os
 

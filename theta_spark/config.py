@@ -9,7 +9,7 @@ Mirrors the reference's segmentation/decoding knobs:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 # 1-based category ids; 0 reserved = "no entity"
@@ -25,12 +25,9 @@ PREDICATES = ["defines", "imports", "calls", "contains", "instance_of"]
 class PipelineConfig:
     max_length: int = 128          # tokenizer max length (reference default shape)
     confidence: float = 0.0        # decode confidence threshold
-    fuse_doc_stage: bool = True    # fuse seg+score+decode+dedup per doc (no
-                                   # shuffle); False = relational seg-level path
-    min_mention_len: int = 1
     # model head selection (M1-M5/M9): both scorers satisfy the same
     # seg_texts -> (start_probs, end_probs, offsets) contract and run
-    # through the identical fused mapInPandas stage; both decoders walk
+    # through the one fused per-doc mapInPandas stage; every decoder walks
     # the same prob tensors
     scorer: str = "rule"           # "rule" | "mlp" | path to .npz weights
                                    # (checkpoint inference via sources.registry)
@@ -55,20 +52,12 @@ class PipelineConfig:
     jaccard_threshold: float = 0.9
     cc_max_iters: int = 20
     # scale knobs
-    incremental_delta_only: bool = True  # incremental runs write only delta
-                                   # rows + a retired-doc key table per big
-                                   # stage (manifest points at the base
-                                   # snapshot; read_stage resolves base −
-                                   # retired ∪ delta). False = full rewrite
-                                   # of every stage, the pre-r5 behavior.
     delta_max_chain: int = 8       # auto-flatten a delta stage back into a
                                    # self-contained snapshot once this many
-                                   # incremental runs have chained (each
-                                   # link costs read_stage one anti-join);
-                                   # the Iceberg compaction-policy twin.
-    shuffle_partitions: int = 32
+                                   # refreshes have chained (each link
+                                   # costs read_stage one anti-join); the
+                                   # Iceberg compaction-policy twin.
     salt_buckets: int = 8          # salting for skewed canonical entities
-    hot_key_threshold: int = 10_000
 
     @property
     def seg_len(self) -> int:
@@ -79,5 +68,3 @@ class PipelineConfig:
     def seg_stride(self) -> int:
         # reference: task_ner.py:185 (seg_stride = int(seg_len / 2))
         return self.seg_len // 2
-
-    labels: list = field(default_factory=lambda: list(NER_LABELS))

@@ -101,11 +101,6 @@ def fingerprint(col: Column, k: int = 8) -> Column:
     return F.array_min(shingles)
 
 
-def content_hash(col: Column) -> Column:
-    """Exact-dedup key: sha256 of the raw text (input_hint invariant)."""
-    return F.sha2(col, 256)
-
-
 def bm25_topk(df, query_terms: list[str], k: int = 10, k1: float = 1.2, b: float = 0.75,
               id_col: str = "doc_id", text_col: str = "text"):
     """Okapi BM25 (Lucene idf variant: ln(1 + (N - df + .5)/(df + .5)))

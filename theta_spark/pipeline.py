@@ -2,10 +2,9 @@
 
     corpus(repo, path, commit, lang, content)
       -> doc_id + sha256 invariant                       [narrow]
-      -> sliding-window segments (W1)                    [narrow fan-out]
-      -> mapInPandas score+decode (M*/D1 fused)          [Arrow batches]
-      -> un-shift + dedup (G1/G2)                        [shuffle]
-      -> triples via windows + joins                     [shuffle]
+      -> per-doc mapInPandas: segment (W1), score +
+         decode (M*/D1), un-shift + dedup (G1/G2),
+         triple assembly                                 [Arrow batches]
       -> canonicalization (LSH + CC) on entity names     [small table]
       -> nodes/edges materialization (salted agg)        [shuffle]
 
@@ -13,6 +12,8 @@ Per-row invariant: sha256(content) via F.sha2 carried from the scan into the
 mentions output (input_hint contract). Every stage is a checkpointable
 parquet snapshot via `run_checkpointed` with per-stage lineage + metrics
 (north rule: resumable with per-partition lineage and metrics tables).
+A full build is a refresh from an empty prior: `run_pipeline` is the one
+driver for both.
 """
 
 from __future__ import annotations
@@ -26,14 +27,8 @@ from pyspark.sql import functions as F
 
 from theta_spark.canonicalize import canonicalize_names
 from theta_spark.config import PipelineConfig
-from theta_spark.operators.extract import (
-    extract_doc_mentions_df,
-    extract_doc_triples_df,
-    score_and_decode,
-)
-from theta_spark.operators.merge import dedup_mentions, unshift_mentions
-from theta_spark.operators.segmentation import segment
-from theta_spark.operators.triples import assemble_triples, with_category_names, with_norm
+from theta_spark.operators.extract import extract_doc_mentions_df, extract_doc_triples_df
+from theta_spark.operators.triples import with_category_names, with_norm
 
 
 def with_doc_id(corpus: DataFrame) -> DataFrame:
@@ -74,37 +69,28 @@ def _resolve_scorer(cfg: PipelineConfig):
 def extract_mentions_df(corpus: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """corpus -> deduped document-level mentions with category names + norms.
 
-    Default path fuses segmentation+score+decode+dedup per doc in one
-    narrow mapInPandas stage (zero shuffles before triple assembly); set
-    cfg.fuse_doc_stage=False for the relational segment-level path (for
-    unbounded-size documents where per-doc processing could skew).
-    cfg.scorer/cfg.decoder select the model head (M1 rule/MLP) and decode
-    (D1 span / M3 CRF-Viterbi) run inside the same stage."""
+    Segmentation+score+decode+dedup run per doc in one narrow mapInPandas
+    stage (zero shuffles before triple assembly). cfg.scorer/cfg.decoder
+    select the model head (M1 rule/MLP) and decode (D1 span / M3
+    CRF-Viterbi) run inside the same stage."""
     cfg = cfg or PipelineConfig()
-    docs = with_doc_id(corpus)
-    if cfg.fuse_doc_stage:
-        mentions = extract_doc_mentions_df(
-            docs, cfg.seg_len, cfg.seg_stride, cfg.confidence,
-            scorer=_resolve_scorer(cfg), decoder=cfg.decoder, gp_max_span=cfg.gp_max_span,
-        )
-    else:
-        segs = segment(docs, "text", cfg.seg_len, cfg.seg_stride)
-        raw = score_and_decode(segs, cfg.confidence)
-        mentions = dedup_mentions(unshift_mentions(raw))
+    mentions = extract_doc_mentions_df(
+        with_doc_id(corpus), cfg.seg_len, cfg.seg_stride, cfg.confidence,
+        scorer=_resolve_scorer(cfg), decoder=cfg.decoder, gp_max_span=cfg.gp_max_span,
+    )
     return with_norm(with_category_names(mentions))
 
 
 def extract_triples(corpus: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """corpus -> triples(subj, pred, obj, doc_id). Default: fully-fused
-    per-doc stage (zero shuffles; scales with cores). Relational path
-    (mentions -> window assembly) when fuse_doc_stage=False."""
+    """corpus -> triples(subj, pred, obj, doc_id, sha256) in one fused
+    per-doc stage: re-scores the corpus (narrow, scales with cores)
+    instead of shuffling the 20x-larger mention stream through a
+    string-keyed window sort."""
     cfg = cfg or PipelineConfig()
-    if cfg.fuse_doc_stage:
-        return extract_doc_triples_df(
-            with_doc_id(corpus), cfg.seg_len, cfg.seg_stride, cfg.confidence,
-            scorer=_resolve_scorer(cfg), decoder=cfg.decoder, gp_max_span=cfg.gp_max_span,
-        )
-    return assemble_triples(extract_mentions_df(corpus, cfg))
+    return extract_doc_triples_df(
+        with_doc_id(corpus), cfg.seg_len, cfg.seg_stride, cfg.confidence,
+        scorer=_resolve_scorer(cfg), decoder=cfg.decoder, gp_max_span=cfg.gp_max_span,
+    )
 
 
 def compute_canon_map(mentions: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -287,7 +273,7 @@ def run_checkpointed_delta(
     stage: str,
     delta_build: "callable",
     retired_build: "callable",
-    base_workdir: str,
+    base_workdir: str | None,
     partition_cols: list | None = None,
     resume: bool = True,
     extra_manifest: dict | None = None,
@@ -312,7 +298,16 @@ def run_checkpointed_delta(
     stage that re-flattens on resume.
 
     Lineage/audit cover the delta files (the base snapshot is audited by
-    its own run's lineage). Returns the RESOLVED view."""
+    its own run's lineage). Returns the RESOLVED view.
+
+    With no base (a full build is a refresh from an empty prior) the
+    delta IS the whole stage: a plain self-contained run_checkpointed
+    commit, no `_retired` table."""
+    if base_workdir is None:
+        return run_checkpointed(
+            spark, workdir, stage, delta_build, partition_cols=partition_cols,
+            resume=resume, extra_manifest=extra_manifest,
+        )
 
     def _post():
         retired_build().select("doc_id").distinct().coalesce(1).write.mode(
@@ -415,14 +410,12 @@ def stage_manifest(workdir: str, stage: str) -> dict:
 # config fields that determine the ROWS of the mentions/triples stages.
 # Deliberately excluded (ADVICE r4): graph-layer knobs (shingle_k,
 # minhash_rows, lsh_bands, jaccard_threshold, cc_max_iters) and physical
-# knobs (fuse_doc_stage — both paths are differentially tested
-# row-identical — shuffle_partitions, salt_buckets, hot_key_threshold):
-# changing those leaves prior mention/triple rows valid, so an incremental
-# merge against them must NOT be rejected as config drift.
-_EXTRACTION_CFG_FIELDS = (
-    "max_length", "confidence", "min_mention_len",
-    "scorer", "decoder", "gp_max_span", "labels",
-)
+# knobs (salt_buckets, delta_max_chain): changing those leaves prior
+# mention/triple rows valid, so an incremental merge against them must
+# NOT be rejected as config drift. Manifests written when the config had
+# more extraction fields still validate: the drift check compares only
+# the fields both sides recorded.
+_EXTRACTION_CFG_FIELDS = ("max_length", "confidence", "scorer", "decoder", "gp_max_span")
 
 
 def _cfg_fingerprint(cfg) -> str:
@@ -461,9 +454,9 @@ def read_stage(spark: SparkSession, workdir: str, stage: str) -> DataFrame:
     is resolved lazily as base − retired ∪ delta, recursing through a
     chain of incremental runs (each link costs one key-only anti-join —
     the parquet-fallback twin of reading an Iceberg snapshot chain).
-    Chains are bounded operationally by running a full (non-incremental)
-    rewrite every few increments, exactly like Iceberg snapshot
-    compaction."""
+    Chains are bounded by cfg.delta_max_chain: the commit that would
+    reach it flattens the stage in place (rewrite_stage_full), exactly
+    like an Iceberg snapshot-compaction policy."""
     local = read_stage_local(spark, workdir, stage)
     manifest = stage_manifest(workdir, stage)
     base_dir = manifest.get("delta_base")
@@ -540,37 +533,13 @@ def corpus_delta(docs: DataFrame, prior_stage: DataFrame, prior_keys: DataFrame 
     return reused, delta_docs
 
 
-def run_pipeline_incremental(
-    spark: SparkSession,
-    corpus: DataFrame,
-    workdir: str,
-    prior_workdir: str,
-    cfg: PipelineConfig | None = None,
-    resume: bool = True,
-):
-    """Incremental run against a prior run's snapshots: re-score ONLY
-    new/changed documents (by the doc_id+sha256 invariant), reuse prior
-    mentions/triples rows for byte-identical docs, then rebuild the graph
-    layer from the merged streams.
-
-    Canonicalization and the node/edge aggregates are recomputed over the
-    MERGED data by design: entity resolution is corpus-global (one new
-    mention can merge two existing clusters), but it runs over distinct
-    entity NAMES — orders of magnitude smaller than the corpus — while
-    the corpus-proportional cost (segment + score + decode) is paid only
-    for the delta. Output snapshots land in `workdir` with the same
-    stage layout as run_pipeline, so a later incremental run can chain
-    off this one; the extra `delta_stats` stage records what was reused.
-    """
-    cfg = cfg or PipelineConfig()
-    docs = with_doc_id(corpus)
-    cfg_fp = _cfg_fingerprint(cfg)
-
-    # fail FAST on config drift (ADVICE r3): a prior run scored under a
-    # different head/segmentation would otherwise surface as a late
-    # union/column error — or silently mix rows scored under different
-    # models. Old snapshots without a recorded config fall back to a
-    # column-set check at union time (unionByName still fails loud).
+def _check_config_drift(prior_workdir: str, cfg_fp: str) -> None:
+    """Fail FAST on config drift against the prior run (ADVICE r3): a
+    prior run scored under a different head/segmentation would otherwise
+    surface as a late union/column error — or silently mix rows scored
+    under different models. Old snapshots without a recorded config fall
+    back to a column-set check at union time (unionByName still fails
+    loud), with a warning."""
     for st in ("mentions", "triples"):
         manifest = stage_manifest(prior_workdir, st)
         prior_cfg = manifest.get("config")
@@ -606,135 +575,144 @@ def run_pipeline_incremental(
                 f"prior {st} stage at {prior_workdir} predates config recording: "
                 "config drift cannot be validated; the merge proceeds on "
                 "column-set compatibility only. Re-run full once to stamp it.",
-                stacklevel=2,
+                stacklevel=3,
             )
+
+
+def run_pipeline(
+    spark: SparkSession,
+    corpus: DataFrame,
+    workdir: str,
+    cfg: PipelineConfig | None = None,
+    resume: bool = True,
+    prior_workdir: str | None = None,
+):
+    """Checkpoint-resumable KG build; returns {stage: DataFrame}.
+
+    A refresh (`prior_workdir` set) re-scores ONLY new/changed documents
+    (by the doc_id+sha256 invariant). Its big row stages (mentions,
+    triples, edge_provenance) commit only the rows this run changed plus
+    a `_retired` doc-key table; unchanged docs' rows resolve from the
+    prior snapshots by reference (read_stage), so write volume is
+    delta-proportional. A full build is the same run from an EMPTY prior:
+    every document is extracted and every commit is self-contained. Both
+    commit the same eight stages, so any run can be the next one's prior.
+
+    Canonicalization and the node/edge aggregates are recomputed over the
+    merged data by design: entity resolution is corpus-global (one new
+    mention can merge two existing clusters), but it runs over distinct
+    entity NAMES — orders of magnitude smaller than the corpus — while
+    the corpus-proportional cost (segment + score + decode) is paid only
+    for the delta. `scored_docs` is the (doc_id, sha256) registry the next
+    refresh deltas against (it witnesses zero-yield docs, which
+    row-bearing stages cannot); `delta_stats` records (n_docs,
+    n_extracted, n_retired).
+    """
+    import threading
+
+    cfg = cfg or PipelineConfig()
+    docs = with_doc_id(corpus)
+    cfg_fp = _cfg_fingerprint(cfg)
 
     # prior scored-docs REGISTRY: every (doc_id, sha256) the prior run
     # scored, including zero-yield docs. Without it (pre-r4 snapshots) the
     # delta falls back to row-bearing stage keys, which re-extracts
     # zero-yield docs every run (correct but not delta-proportional).
     prior_keys = None
-    if stage_complete(prior_workdir, "scored_docs"):
-        prior_keys = read_stage(spark, prior_workdir, "scored_docs")
+    if prior_workdir is not None:
+        _check_config_drift(prior_workdir, cfg_fp)
+        if stage_complete(prior_workdir, "scored_docs"):
+            prior_keys = read_stage(spark, prior_workdir, "scored_docs")
 
-    def _delta_corpus(prior_stage: DataFrame):
-        reused, delta_docs = corpus_delta(docs, prior_stage, prior_keys=prior_keys)
-        delta = delta_docs.select(
-            "repo", "path", "commit", "lang", F.col("text").alias("content")
+    def _to_extract(stage: str) -> DataFrame:
+        # the one place that picks the docs to extract. With no prior it is
+        # the corpus itself: an anti-join against an empty frame is not
+        # pruned — it plans a sort-merge join that shuffles every
+        # document's content ahead of the Python stage
+        if prior_workdir is None:
+            return corpus
+        _, delta_docs = corpus_delta(
+            docs, read_stage(spark, prior_workdir, stage), prior_keys=prior_keys
         )
-        return reused, delta
+        return delta_docs.select("repo", "path", "commit", "lang", F.col("text").alias("content"))
 
-    # delta-only commits (cfg.incremental_delta_only, default): the big
-    # row stages write ONLY the delta extraction + a retired-doc key
-    # table; unchanged docs' rows resolve from the prior snapshot by
-    # reference (read_stage). Write volume becomes delta-proportional —
-    # the point of an incremental run at 10^12-file scale, where a full
-    # rewrite of byte-identical rows dwarfs the actual work. The legacy
-    # full-rewrite path is kept behind the flag (self-contained snapshots,
-    # no base dependency at read time).
-    import threading
-
-    delta_only = cfg.incremental_delta_only
     _memo: dict = {}
     _memo_lock = threading.Lock()
 
     def _keys() -> DataFrame:
-        # (doc_id, sha256) of the CURRENT corpus, materialized once: five
-        # independent builders (retired docs x2, delta ids, scored_docs,
-        # delta_stats) consume it — several from parallel commit threads —
-        # and each lazy re-scan would re-read the corpus and re-hash every
-        # document's full content, measured as the delta-only mode's
-        # dominant overhead at 200k docs
+        # (doc_id, sha256) of the CURRENT corpus. A refresh materializes
+        # it once: five independent builders (retired docs x2, delta ids,
+        # scored_docs, delta_stats) consume it — several from parallel
+        # commit threads — and each lazy re-scan would re-read the corpus
+        # and re-hash every document's full content, measured as the
+        # refresh's dominant overhead at 200k docs. A full build hashes
+        # only for scored_docs (delta_stats' count prunes the hash), so it
+        # stays lazy there.
         with _memo_lock:
             if "keys" not in _memo:
-                _memo["keys"] = docs.select("doc_id", "sha256").localCheckpoint(eager=True)
+                keys = docs.select("doc_id", "sha256")
+                _memo["keys"] = keys if prior_workdir is None else keys.localCheckpoint(eager=True)
             return _memo["keys"]
 
-    def _prior_all_keys(stage: str) -> DataFrame:
+    def _prior_all_keys() -> DataFrame:
         if prior_keys is not None:
             return prior_keys.select("doc_id", "sha256")
-        return read_stage(spark, prior_workdir, stage).select("doc_id", "sha256").distinct()
+        return read_stage(spark, prior_workdir, "mentions").select("doc_id", "sha256").distinct()
 
     def _retired_docs():
         # prior docs no longer byte-identical in the current corpus
         # (changed sha or deleted): their base rows must not resolve
-        return _prior_all_keys("mentions").join(
-            _keys(), ["doc_id", "sha256"], "left_anti"
-        ).select("doc_id")
+        return _prior_all_keys().join(_keys(), ["doc_id", "sha256"], "left_anti").select("doc_id")
 
     def _delta_doc_ids():
-        return _keys().join(
-            _prior_all_keys("mentions"), ["doc_id", "sha256"], "left_anti"
-        ).select("doc_id")
+        return _keys().join(_prior_all_keys(), ["doc_id", "sha256"], "left_anti").select("doc_id")
 
-    def _build_mentions_delta():
-        _, delta = _delta_corpus(read_stage(spark, prior_workdir, "mentions"))
-        return extract_mentions_df(delta, cfg)
-
-    def _build_mentions():
-        reused, delta = _delta_corpus(read_stage(spark, prior_workdir, "mentions"))
-        return extract_mentions_df(delta, cfg).unionByName(reused)
-
-    if delta_only:
-        mentions = run_checkpointed_delta(
-            spark, workdir, "mentions", _build_mentions_delta, _retired_docs,
-            prior_workdir, resume=resume, extra_manifest={"config": cfg_fp},
-            max_chain=cfg.delta_max_chain,
-        )
-    else:
-        mentions = run_checkpointed(
-            spark, workdir, "mentions", _build_mentions, resume=resume,
-            extra_manifest={"config": cfg_fp},
-        )
-
-    def _build_triples_delta():
-        _, delta = _delta_corpus(read_stage(spark, prior_workdir, "triples"))
-        return extract_triples(delta, cfg)
-
-    def _build_triples():
-        reused, delta = _delta_corpus(read_stage(spark, prior_workdir, "triples"))
-        return extract_triples(delta, cfg).unionByName(reused)
-
-    if delta_only:
-        triples = run_checkpointed_delta(
-            spark, workdir, "triples", _build_triples_delta, _retired_docs,
-            prior_workdir, resume=resume, extra_manifest={"config": cfg_fp},
-            max_chain=cfg.delta_max_chain,
-        )
-    else:
-        triples = run_checkpointed(
-            spark, workdir, "triples", _build_triples, resume=resume,
-            extra_manifest={"config": cfg_fp},
-        )
-
-    def _build_scored_docs():
-        return _keys().distinct()
+    mentions = run_checkpointed_delta(
+        spark, workdir, "mentions", lambda: extract_mentions_df(_to_extract("mentions"), cfg),
+        _retired_docs, prior_workdir, resume=resume, extra_manifest={"config": cfg_fp},
+        max_chain=cfg.delta_max_chain,
+    )
+    triples = run_checkpointed_delta(
+        spark, workdir, "triples", lambda: extract_triples(_to_extract("triples"), cfg),
+        _retired_docs, prior_workdir, resume=resume, extra_manifest={"config": cfg_fp},
+        max_chain=cfg.delta_max_chain,
+    )
 
     def _build_delta_stats():
-        prior_docs = _prior_all_keys("mentions")
-        keys = _keys()
+        n_docs = _keys().count()
+        n_extracted, n_retired = (
+            (n_docs, 0)
+            if prior_workdir is None
+            else (_delta_doc_ids().count(), _retired_docs().count())
+        )
         return spark.createDataFrame(
-            [
-                (
-                    keys.count(),
-                    keys.join(prior_docs, ["doc_id", "sha256"], "left_anti").count(),
-                    prior_docs.join(keys, ["doc_id", "sha256"], "left_anti").count(),
-                )
-            ],
+            [(n_docs, n_extracted, n_retired)],
             "n_docs long, n_extracted long, n_retired long",
         )
 
     graph = _commit_graph_layer(
         spark, workdir, triples, mentions, cfg, resume,
         extra_stages=[
-            ("scored_docs", _build_scored_docs, None),
+            ("scored_docs", lambda: _keys().distinct(), None),
             ("delta_stats", _build_delta_stats, None),
         ],
-        delta_base=prior_workdir if delta_only else None,
-        retired_docs_build=_retired_docs if delta_only else None,
-        delta_doc_ids_build=_delta_doc_ids if delta_only else None,
+        delta_base=prior_workdir,
+        retired_docs_build=_retired_docs,
+        delta_doc_ids_build=_delta_doc_ids,
     )
     return {"mentions": mentions, "triples": triples, **graph}
+
+
+def run_pipeline_incremental(
+    spark: SparkSession,
+    corpus: DataFrame,
+    workdir: str,
+    prior_workdir: str,
+    cfg: PipelineConfig | None = None,
+    resume: bool = True,
+):
+    """Refresh against a prior run's snapshots: run_pipeline with a prior."""
+    return run_pipeline(spark, corpus, workdir, cfg, resume, prior_workdir)
 
 
 def _commit_graph_layer(
@@ -746,8 +724,8 @@ def _commit_graph_layer(
     resume: bool,
     extra_stages: list | None = None,
     delta_base: str | None = None,
-    retired_docs_build: "callable | None" = None,
-    delta_doc_ids_build: "callable | None" = None,
+    retired_docs_build: "callable" = None,
+    delta_doc_ids_build: "callable" = None,
 ):
     """Commit the graph-layer stages (nodes, canon_map, edge_provenance,
     then edges) with the independent commits batched CONCURRENTLY — the
@@ -762,14 +740,15 @@ def _commit_graph_layer(
     hive-style parquet dirs in the sandbox fallback): both are
     low-cardinality columns every downstream graph query filters on, so
     the scan prunes whole directories. The tiny canon_map snapshot is what
-    lets the NEXT incremental run detect which canonical assignments
-    drifted without recomputing anything.
+    lets the NEXT refresh detect which canonical assignments drifted
+    without recomputing anything.
 
     `extra_stages` (name, build, partition_cols) are independent small
     commits (scored_docs, delta_stats) that ride the same parallel batch.
 
-    Incremental mode (`delta_base` set, from run_pipeline_incremental):
-    edge_provenance — one row per triple OCCURRENCE, the biggest graph
+    Refresh mode (`delta_base` set: run_pipeline with a prior, which also
+    passes the `retired_docs_build` / `delta_doc_ids_build` doc-key
+    builders): edge_provenance — one row per triple OCCURRENCE, the biggest graph
     snapshot — is committed DELTA-ONLY when the prior run recorded a
     canon_map: rows are rewritten only for (a) this run's new/changed
     docs and (b) docs owning a triple whose subj/obj canonical assignment
@@ -816,20 +795,14 @@ def _commit_graph_layer(
             F.col("pred"), F.pmod(F.xxhash64("doc_id"), F.lit(16))
         ).sortWithinPartitions("pred", "subj", "obj")
 
-    prov_delta_mode = (
-        delta_base is not None
-        and cfg.incremental_delta_only
-        and retired_docs_build is not None
-        and delta_doc_ids_build is not None
-        and stage_complete(delta_base, "canon_map")
-    )
-    if delta_base is not None and not prov_delta_mode and cfg.incremental_delta_only:
+    prov_delta_mode = delta_base is not None and stage_complete(delta_base, "canon_map")
+    if delta_base is not None and not prov_delta_mode:
         import warnings
 
         warnings.warn(
             f"prior run at {delta_base} has no canon_map snapshot: canonical "
             "drift cannot be diffed, so edge_provenance is rewritten in full "
-            "this run (delta-only resumes on the next incremental).",
+            "this run (delta-only resumes on the next refresh).",
             stacklevel=2,
         )
 
@@ -944,40 +917,3 @@ def _commit_graph_layer(
     for name, _, _ in extra_stages or []:
         result[name] = out[name]
     return result
-
-
-def run_pipeline(spark: SparkSession, corpus: DataFrame, workdir: str, cfg: PipelineConfig | None = None, resume: bool = True):
-    """Full checkpoint-resumable run; returns dict of stage DataFrames."""
-    cfg = cfg or PipelineConfig()
-    cfg_fp = _cfg_fingerprint(cfg)
-    mentions = run_checkpointed(
-        spark, workdir, "mentions", lambda: extract_mentions_df(corpus, cfg), resume=resume,
-        extra_manifest={"config": cfg_fp},
-    )
-
-    def _build_triples():
-        if cfg.fuse_doc_stage:
-            # fused per-doc path: re-scores the corpus (narrow, scales with
-            # cores) instead of shuffling the 20x-larger mention stream
-            # through a string-keyed window sort
-            return extract_triples(corpus, cfg)
-        return assemble_triples(mentions)
-
-    triples = run_checkpointed(
-        spark, workdir, "triples", _build_triples, resume=resume,
-        extra_manifest={"config": cfg_fp},
-    )
-
-    # scored-docs registry: every (doc_id, sha256) this run scored —
-    # INCLUDING zero-yield docs, which row-bearing stages cannot witness.
-    # Incremental runs delta against this registry so an unchanged
-    # zero-mention doc is never re-extracted. Tiny (two short string
-    # columns), committed in the parallel graph batch.
-    def _build_scored_docs():
-        return with_doc_id(corpus).select("doc_id", "sha256").distinct()
-
-    graph = _commit_graph_layer(
-        spark, workdir, triples, mentions, cfg, resume,
-        extra_stages=[("scored_docs", _build_scored_docs, None)],
-    )
-    return {"mentions": mentions, "triples": triples, **graph}

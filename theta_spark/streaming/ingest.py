@@ -1,5 +1,5 @@
-"""Streaming incremental KG ingest — the streaming twin of
-`pipeline.run_pipeline_incremental`.
+"""Streaming incremental KG ingest — the streaming twin of a
+`pipeline.run_pipeline` refresh.
 
 A corpus stream (commit firehose: repo/path/commit/lang/content rows,
 the input_hint shape) is ingested epoch by epoch under foreachBatch;
